@@ -1,16 +1,27 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DateType, FloatType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, DateType, FloatType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Canonical loaders for the test star schema (see FIXTURES.md).
   *
   * All tables are single parquet files per scale-factor directory. The
-  * loaders are thin `spark.read.parquet` wrappers so that Catalyst's
-  * column pruning and predicate pushdown reach the scan untouched — at
-  * cluster scale these become multi-file scans with partition pruning
-  * for free, since nothing here forces materialization.
+  * loaders read with `spark.read.schema(footerSchema(...)).parquet` so
+  * that Catalyst's column pruning and predicate pushdown reach the scan
+  * untouched — at cluster scale these become multi-file scans with
+  * partition pruning for free, since nothing here forces
+  * materialization. The schema comes from the first data file's parquet
+  * footer, read and converted on the driver with Spark's own converter:
+  * a bare `spark.read.parquet` infers the same schema by running a
+  * one-task Spark job on every read, about 55 of the 65 ms a load took
+  * at local[4] on a 4-core x86 box. The footer is re-read on every call
+  * (no memo), so fixture drift is still seen on every load.
   *
   * `events.ts` has drifted across driver fixture generations:
   * originally TIMESTAMP(NANOS, isAdjustedToUTC=false) — which Spark's
@@ -34,8 +45,56 @@ import org.apache.spark.sql.types.{DataType, DateType, FloatType, LongType, Time
   */
 object Tables {
 
-  private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The schema `spark.read.parquet(path)` would infer, without its Spark
+    * job: `path` resolves to its first data file (the path itself, or the
+    * first entry of a flat directory by path order, skipping the `_`/`.`
+    * names Spark's listing skips), whose footer is converted under the
+    * session's SQLConf (`nanosAsLong`, `inferTimestampNTZ`, ...). Anything
+    * else — a missing path, an empty or nested (partitioned) directory,
+    * parquet summary files — takes the inferring read, so Spark's own
+    * named errors and partition discovery still apply there.
+    */
+  private[graft] def footerSchema(spark: SparkSession, path: String): StructType = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(hadoopConf)
+    val file =
+      if (!fs.exists(p)) None
+      else {
+        val st = fs.getFileStatus(p)
+        if (st.isFile) Some(st)
+        else {
+          val (hidden, data) = fs.listStatus(p).toSeq.partition { e =>
+            val n = e.getPath.getName
+            n.startsWith("_") || n.startsWith(".")
+          }
+          // Spark prefers summary files' schema over any part file's
+          val summaries = hidden.exists(e => Set("_metadata", "_common_metadata")(e.getPath.getName))
+          if (summaries || data.exists(_.isDirectory)) None
+          else data.sortBy(_.getPath.toString).headOption
+        }
+      }
+    file match {
+      case Some(st) =>
+        // the converter inference builds (ParquetFileFormat.mergeSchemasInParallel)
+        val conf = spark.sessionState.conf
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+        val meta = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(st, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, meta), converter)
+      case None => spark.read.parquet(path).schema
+    }
+  }
+
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+  }
 
   /** Fail fast if driver-regenerated data drifts from FIXTURES.md. */
   private def assertCols(df: DataFrame, table: String, cols: Seq[String]): DataFrame = {

@@ -20,16 +20,16 @@ object StreamOps {
     * the session is pinned UTC so wall-clock values match the batch
     * loader's TIMESTAMP_NTZ).
     *
-    * Streaming sources require a user schema; it is taken from a one-off
-    * batch footer read of the same path so whichever physical `ts`
+    * Streaming sources require a user schema; it is taken from the
+    * path's parquet footer (`Tables.footerSchema`) so whichever physical `ts`
     * encoding the fixture generation used (int64 nanos vs timestamp[us])
     * gets the same dispatch as `Tables.events`. The footer read is
-    * driver-side and O(files), not a data scan.
+    * driver-side, one file's footer, and runs no Spark job.
     */
   def eventsStream(spark: SparkSession, path: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.readStream
-      .schema(spark.read.parquet(path).schema)
+      .schema(graft.sources.Tables.footerSchema(spark, path))
       .parquet(path)
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
